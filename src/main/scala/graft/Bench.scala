@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.engine.GraftSession
 
 /** Driver benchmark: times every registered query at SPARK_GRAFT_SF_DIR and
   * prints a one-line JSON artifact per completed sweep (the LAST line is the
@@ -41,7 +42,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Optional comma-separated name filter for fast local iteration; the
     // driver sets no filter and always times the full surface.
     val only: Option[Set[String]] =
@@ -68,11 +68,7 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_BENCH_RETRY_SEC", "90").toDouble
     val maxSweeps = 3
     val maxMeasPerQuery = 4
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local("graft-bench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     StallMeter.start()
     // absorb one-time JVM/codegen/scan-setup cost outside the timed loop

@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.engine.Warehouse
+import graft.engine.{GraftSession, Warehouse}
 
 /** Companion to ScaleBench: demonstrates the engine's answer to the one
   * badly-scaling join shape. Times the same big-big join (a) as a plain
@@ -14,13 +13,10 @@ import graft.engine.Warehouse
 object BucketBench {
   def main(args: Array[String]): Unit = {
     val rows = args.headOption.map(_.toLong).getOrElse(100000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.envCpus
     val wh = java.nio.file.Files.createTempDirectory("graft_bucket_bench")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = GraftSession.local("graft-bucket-bench")
       .config("spark.sql.warehouse.dir", wh.toString)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -48,8 +44,8 @@ object BucketBench {
     val plainSec = time(joinAgg(fact, orders))
 
     val layoutSec = time {
-      Warehouse.writeBucketed(fact, "bb_fact", "orderkey", cpus.toInt)
-      Warehouse.writeBucketed(orders, "bb_orders", "orderkey", cpus.toInt)
+      Warehouse.writeBucketed(fact, "bb_fact", "orderkey", cpus)
+      Warehouse.writeBucketed(orders, "bb_orders", "orderkey", cpus)
     }
     val bucketedSec = time(
       joinAgg(spark.table("bb_fact"), spark.table("bb_orders")))

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.engine.GraftSession
 
 /** Plan-inspection utility: prints the formatted physical plan of selected
   * queries (all, if no names given) so shuffle/broadcast/pushdown choices
@@ -14,14 +14,7 @@ object Explain {
     // match the bench session shape (cores + shuffle partitions) so the
     // printed plans are the ones the bench actually costs — a 4-core
     // session re-decides broadcast/exchange choices
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    require(cpus.forall(_.isDigit) && cpus.nonEmpty,
-      s"SPARK_GRAFT_CPUS must be a positive integer, got '$cpus'")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local("graft-explain").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.engine.GraftSession
 
 /** fp-stability census (round-16 verdict task 1): q140/q254 were only
   * discovered because ONE pair of bench runs happened to flip them — and
@@ -27,16 +27,11 @@ import org.apache.spark.sql.SparkSession
 object FpCensus {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val passes = sys.env.getOrElse("SPARK_GRAFT_CENSUS_PASSES", "10").toInt
     val outDir = sys.env.getOrElse("SPARK_GRAFT_CENSUS_OUT", "target/fp_census")
     val only: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local("graft-fp-census").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000L).selectExpr("sum(id)").collect()
     val out = java.nio.file.Paths.get(outDir)

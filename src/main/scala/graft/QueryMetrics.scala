@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.engine.GraftSession
 
 /** Per-query TaskMetrics decomposition at an arbitrary SF (round-17
   * verdict task 4): the 1B jaccard run got its superlinearity measured
@@ -18,20 +18,16 @@ import org.apache.spark.sql.SparkSession
   * applied here from the start).
   *
   * Usage: runMain graft.QueryMetrics <sfDir> <name,name,...> [out.json]
-  * Env: SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_REPS (default 2).
+  * Env: SPARK_GRAFT_CPUS (default: all processors), SPARK_GRAFT_REPS
+  * (default 2).
   */
 object QueryMetrics {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
     val outPath = if (args.length > 2) Some(args(2)) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local("graft-query-metrics").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val mAgg = new java.util.concurrent.ConcurrentHashMap[
       String, java.util.concurrent.atomic.LongAdder]()

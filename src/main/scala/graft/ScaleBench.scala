@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.engine.GraftSession
 
 /** Scaling evidence beyond the bundled scale factors: synthesizes
   * lineitem-shaped data with spark.range (no disk, so row count is bounded
@@ -18,9 +19,7 @@ object ScaleBench {
     val big = args.drop(1).headOption.map(_.toLong).getOrElse(100000000L)
     val onlyShapes: Option[Set[String]] =
       if (args.length > 2) Some(args.drop(2).toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = GraftSession.local("graft-scale-bench")
       // shuffle-partition override for the 10⁹-row decade: a fixed
       // partitions=cpus harness gives ~600 MB per-task sorts at 1B
       // rows (disk spill reads as superlinearity), where a real
@@ -28,8 +27,8 @@ object ScaleBench {
       // a shape measure the PLAN at the partitioning the data size
       // calls for, holding cores constant
       .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.ui.enabled", "false")
+        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS",
+          GraftSession.envCpus.toString))
       // diagnosis knob for ObjectHashAggregate's sort fallback (default
       // 128 distinct groups per partition — relevant to every
       // TypedImperativeAggregate shape)

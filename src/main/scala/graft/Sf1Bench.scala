@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.engine.GraftSession
 
 /** sf1 scaling anchor (round-13 verdict task 3): every per-query number
   * in the sf0.1 bench sits on a ~1 s job-overhead floor, so the bench
@@ -112,12 +113,7 @@ object Sf1Bench {
     val names = if (args.length > 1) args.drop(1).toSeq else Top20
     val outPath = if (args.length > 1) "docs/bench_sf1_extra.json"
                   else "docs/bench_sf1_top20.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local("graft-sf1-bench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     StallMeter.start()
     if (!new java.io.File(s"$dst/lineitem.parquet").exists()) {

@@ -1,7 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.engine.GraftSession
 
 /** Decade scale shape for a STATEFUL stream (round-17 verdict task 5):
   * streaming has crash tests and sf1 anchors, but no measurement that
@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * MODEL (k cells), never of event count.
   *
   * Usage: runMain graft.StreamScale [rowsSmall rowsBig [k batches]]
-  * Env: SPARK_GRAFT_CPUS (default 32).
+  * Env: SPARK_GRAFT_CPUS (default: all processors).
   */
 object StreamScale {
   def main(args: Array[String]): Unit = {
@@ -24,12 +24,7 @@ object StreamScale {
     val big = args.drop(1).headOption.map(_.toLong).getOrElse(100000000L)
     val k = args.drop(2).headOption.map(_.toInt).getOrElse(16)
     val batches = args.drop(3).headOption.map(_.toInt).getOrElse(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local("graft-stream-scale").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def run(n: Long): (Double, Int, Long, Long, Long) = {

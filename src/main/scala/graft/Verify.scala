@@ -1,6 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.ObjectMapper
+import graft.engine.GraftSession
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -9,36 +11,21 @@ object Verify {
     // Optional third arg: comma-separated query names (fast local iteration).
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local("graft-verify").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    val failed = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      .flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val dynamic = SparkEntry.dynamicOracleSql
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, render) => name -> render(spark, sfDir) }
@@ -54,13 +41,12 @@ object Verify {
     // renamed/deleted queries are dropped by intersecting with the live
     // query map.
     val path = Paths.get(s"$outDir/oracle_sql.json")
+    val json = new ObjectMapper()
     val existing: Map[String, String] =
       if (only.isDefined && Files.exists(path)) {
         val parsed =
           try {
-            val node = new com.fasterxml.jackson.databind.ObjectMapper()
-              .readTree(path.toFile)
-            import scala.jdk.CollectionConverters._
+            val node = json.readTree(path.toFile)
             node.properties().asScala
               .map(e => e.getKey -> e.getValue.asText()).toMap
           } catch { case e: Throwable =>
@@ -73,9 +59,12 @@ object Verify {
           }
         parsed.filter { case (k, _) => SparkEntry.queries.contains(k) }
       } else Map.empty
-    val json = (existing ++ static ++ dynamic)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(path, json)
+    json.writeValue(path.toFile, (existing ++ static ++ dynamic).asJava)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} queries failed: " +
+        failed.toSeq.sorted.mkString(","))
+      sys.exit(1)
+    }
   }
 }

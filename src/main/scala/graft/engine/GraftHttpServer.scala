@@ -2,7 +2,7 @@ package graft.engine
 
 import java.io.{DataInputStream, DataOutputStream, EOFException}
 import java.net.InetSocketAddress
-import java.util.concurrent.Executors
+import java.util.concurrent.{ExecutorService, Executors, TimeUnit}
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
@@ -30,7 +30,10 @@ import org.apache.spark.sql.graftshim.ArrowBridge
   * Framing: each Arrow IPC batch (schema embedded) is preceded by its
   * 4-byte big-endian length; the stream ends at EOF. Auth failures map to
   * 401 with the service's uniform AUTHENTICATION_FAILED (no client-id
-  * enumeration), other rejections to 400, unexpected errors to 500.
+  * enumeration), a PUT body over [[GraftHttpServer.MaxBodyBytes]] to 413,
+  * other rejections to 400, unexpected errors to 500. The PUT body is
+  * read only after the service has authenticated the caller and accepted
+  * the filename.
   */
 final class GraftHttpServer(service: GraftService, port: Int = 0) {
 
@@ -38,17 +41,26 @@ final class GraftHttpServer(service: GraftService, port: Int = 0) {
     HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
   // small fixed pool: each request may run Spark jobs; unbounded request
   // concurrency would just queue on the cluster anyway
-  server.setExecutor(Executors.newFixedThreadPool(4))
+  private[engine] val pool: ExecutorService = Executors.newFixedThreadPool(4)
+  server.setExecutor(pool)
   server.createContext("/files", (ex: HttpExchange) => handle(ex))
 
   /** Start listening; returns the bound port (ephemeral when 0). */
   def start(): Int = { server.start(); server.getAddress.getPort }
 
-  def stop(): Unit = server.stop(0)
+  /** Stop listening and shut the request pool down, waiting briefly for
+    * in-flight requests. */
+  def stop(): Unit = {
+    server.stop(0)
+    pool.shutdown()
+    pool.awaitTermination(10, TimeUnit.SECONDS)
+  }
 
   private def handle(ex: HttpExchange): Unit =
     try route(ex)
     catch {
+      case _: GraftHttpServer.BodyTooLarge =>
+        respondText(ex, 413, "PAYLOAD_TOO_LARGE")
       case e: IllegalArgumentException
           if e.getMessage == "AUTHENTICATION_FAILED" =>
         respondText(ex, 401, "AUTHENTICATION_FAILED")
@@ -70,8 +82,7 @@ final class GraftHttpServer(service: GraftService, port: Int = 0) {
         respondText(ex, 200,
           (raw.map("raw/" + _) ++ clean.map("clean/" + _)).mkString("\n"))
       case ("PUT", List("files", filename)) =>
-        val batches = readFrames(ex)
-        service.uploadArrow(client, password, filename, batches)
+        service.uploadArrow(client, password, filename, readFrames(ex))
         respondText(ex, 200, "OK")
       case ("GET", List("files", filename, "report")) =>
         val batches = service.budgetReportArrow(client, password, filename)
@@ -87,13 +98,17 @@ final class GraftHttpServer(service: GraftService, port: Int = 0) {
   private def readFrames(ex: HttpExchange): Array[Array[Byte]] = {
     val in = new DataInputStream(ex.getRequestBody)
     val out = Array.newBuilder[Array[Byte]]
+    var total = 0L
     var done = false
     while (!done) {
       val len =
         try in.readInt()
         catch { case _: EOFException => done = true; -1 }
       if (!done) {
-        require(len >= 0 && len <= (1 << 30), s"bad frame length $len")
+        require(len >= 0, s"bad frame length $len")
+        total += len
+        if (total > GraftHttpServer.MaxBodyBytes)
+          throw new GraftHttpServer.BodyTooLarge
         val buf = new Array[Byte](len)
         in.readFully(buf)
         out += buf
@@ -123,4 +138,12 @@ final class GraftHttpServer(service: GraftService, port: Int = 0) {
     try out.write(bytes)
     finally out.close()
   }
+}
+
+object GraftHttpServer {
+
+  /** Largest total of Arrow frame bytes one PUT may carry. */
+  val MaxBodyBytes: Long = 1L << 30
+
+  private final class BodyTooLarge extends RuntimeException
 }

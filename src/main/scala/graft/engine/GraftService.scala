@@ -73,9 +73,10 @@ final class GraftService(spark: SparkSession, storageBase: Path,
     * arrow -> pandas -> csv sequence (`serve_flight.py:145-151`).
     */
   def uploadArrow(clientId: String, password: String, filename: String,
-                  batches: Array[Array[Byte]]): Map[String, DataFrame] = {
-    // authenticate + gate BEFORE decoding anything — a bad caller must not
-    // cost a Spark job or leave payload bytes on disk
+                  batches: => Array[Array[Byte]]): Map[String, DataFrame] = {
+    // authenticate + gate BEFORE reading or decoding anything (`batches`
+    // is by-name) — a bad caller must not cost a read, a Spark job or
+    // payload bytes on disk
     val tenant = auth(clientId, password)
     Tenancy.validateFilename(tenant, filename)
       .fold(e => throw new IllegalArgumentException(e), identity)
@@ -92,12 +93,7 @@ final class GraftService(spark: SparkSession, storageBase: Path,
           .getOrElse(throw new IllegalStateException("no csv part written"))
         finally ls.close()
       upload(clientId, password, filename, part)
-    } finally {
-      val walk = Files.walk(tmp)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-      finally walk.close()
-    }
+    } finally Pipeline.deleteRecursively(tmp)
   }
 
   /** S7 — Arrow result stream: the budget report as Arrow IPC batches

@@ -39,6 +39,25 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", classOf[GraftExtensions].getName)
 
+  /** `SPARK_GRAFT_CPUS` parsed: a positive integer, or the machine's
+    * processor count when unset. */
+  def parseCpus(raw: Option[String]): Int = raw match {
+    case None => Runtime.getRuntime.availableProcessors
+    case Some(v) =>
+      v.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+  }
+
+  /** Cores for a local session, from the environment. */
+  lazy val envCpus: Int = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
+
+  /** The engine's local session for mains and tests: [[builder]] on
+    * `local[cpus]`, `cpus` shuffle partitions, UI off. */
+  def local(appName: String, cpus: Int = envCpus): SparkSession.Builder =
+    builder(appName, cpus)
+      .master(s"local[$cpus]")
+      .config("spark.ui.enabled", "false")
+
   /** Register the engine's SQL functions on an existing session.
     * (Only the expressions constructible from child expressions alone are
     * SQL-facing; the reference-object probes — NearestCentroid,

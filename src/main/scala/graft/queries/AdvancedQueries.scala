@@ -12,10 +12,7 @@ import graft.engine.Readers
   * "latest prior event" join expressed as a running window maximum
   * (portable to the oracle, and shuffle-free beyond the per-key sort).
   */
-object AdvancedQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
+object AdvancedQueries extends QuerySet {
 
   /** events with the nanosecond timestamp read as long and converted. */
   private def events(s: SparkSession, dir: String): DataFrame =
@@ -129,7 +126,7 @@ object AdvancedQueries {
     })
   )
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
     "q33_percentiles" ->
       """SELECT l_returnflag,
                 round(quantile_cont(l_extendedprice, 0.25), 4) AS p25,

@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.engine.Readers
 import graft.functions.Portable.wsTokens
 
 /** Breadth batch 3: term weighting, decile histograms, pivot tables, and
@@ -11,12 +10,7 @@ import graft.functions.Portable.wsTokens
   * every value is exact integer-ratio arithmetic — engine-portable without
   * tolerance; a production scorer would wrap `ln()` around the same ratio.
   */
-object BreadthQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
-
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
+object BreadthQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -151,7 +145,7 @@ object BreadthQueries {
     })
   )
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
     "q43_term_weights" ->
       s"""WITH tok AS (SELECT doc_id, unnest($tokSql) AS tok FROM documents),
           tf AS (SELECT doc_id, tok, count(*) AS tf FROM tok GROUP BY 1, 2),

@@ -9,12 +9,7 @@ import graft.functions.Portable.wsTokens
   * filtering: n-gram frequency tables, vocabulary statistics, and a
   * user-funnel rollup over the events stream.
   */
-object CorpusQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
-
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
+object CorpusQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -66,7 +61,7 @@ object CorpusQueries {
     })
   )
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
     "q40_top_ngrams" ->
       s"""WITH words AS (SELECT $tokSql AS w FROM documents),
           pos AS (SELECT w, unnest(generate_series(1, len(w) - 1)) AS i

@@ -12,7 +12,7 @@ import graft.ext.{Dedup, Similarity, TextAnalysis}
   * so even the LSH signatures are verified value-for-value in DuckDB, not
   * just row-counted.
   */
-object ExtensionQueries {
+object ExtensionQueries extends QuerySet {
 
   private def docs(s: SparkSession, dir: String): DataFrame =
     Readers.table(s, dir, "documents")
@@ -20,9 +20,6 @@ object ExtensionQueries {
     Readers.table(s, dir, "embeddings")
 
   // ---- shared oracle SQL fragments (DuckDB) -------------------------------
-
-  /** string tokens of `text`, as in Portable.wsTokens. */
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
 
   /** 60-bit md5 hash of a string SQL expression, as in Portable.hash60. */
   private def hashSql(e: String): String =
@@ -142,7 +139,7 @@ object ExtensionQueries {
     s"(CASE WHEN list_dot_product(v, ${planeLit(p)}) > 0 THEN ${1 << p} ELSE 0 END)"
   }.mkString(" + ")
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
     "q22_text_tokens" ->
       raw"""SELECT doc_id, len($tokSql) AS n_tokens_ws,
             len(regexp_extract_all(text, '[a-z0-9]+|[^a-z0-9\s]')) AS n_tokens_re

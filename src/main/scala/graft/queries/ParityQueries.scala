@@ -16,10 +16,7 @@ import graft.engine.models.Corporate
   * total_amount ≅ l_extendedprice), orders feeds the string-cleaning
   * programs, part feeds name normalization and top-k.
   */
-object ParityQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
+object ParityQueries extends QuerySet {
 
   /** lineitem mapped to the fct contract (job_title, total_amount). */
   def lineitemFact(s: SparkSession, dir: String): DataFrame =
@@ -137,7 +134,7 @@ object ParityQueries {
     })
   )
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
     "q01_budget_report" ->
       """SELECT l_returnflag AS job_title, count(*) AS total_employee,
          round(sum(l_extendedprice), 2) AS total_budget

@@ -20,10 +20,7 @@ import graft.engine.Readers
   *  - rollup grouping columns are coalesced to a sentinel so null-ordering
   *    differences between engines cannot affect the compare.
   */
-object RelationalQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
+object RelationalQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -153,7 +150,7 @@ object RelationalQueries {
     })
   )
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
     "q11_join_broadcast" ->
       """SELECT p_brand, count(*) AS n_items,
          round(sum(l_extendedprice), 2) AS revenue

@@ -12,13 +12,7 @@ import graft.ext.{Analytics, GlobalOrder, Stats, TextAnalysis, TimeSeries}
   * columns follow the q110 discipline (exact integer aggregates, or
   * pure selection/one final IEEE formula).
   */
-object Round10Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
-
-  /** DuckDB twin of [[graft.functions.Portable.wsTokens]]. */
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
+object Round10Queries extends QuerySet {
 
   /** q163 posting-list cap. */
   private val PostingsK = 10
@@ -353,7 +347,7 @@ object Round10Queries {
     })
   )
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
 
     "q163_inverted_index" ->
       s"""WITH pairs AS (SELECT DISTINCT doc_id, unnest($tokSql) AS tok
@@ -647,7 +641,7 @@ object Round10Queries {
     * mechanism). Shortest-round-trip double literals re-parse to the
     * same IEEE values in DuckDB.
     */
-  val dynamicOracleSql: Map[String, (SparkSession, String) => String] = Map(
+  override val dynamicOracleSql: Map[String, (SparkSession, String) => String] = Map(
     "q177_mahalanobis_outliers" -> ((s, dir) => {
       val e = Readers.table(s, dir, "embeddings")
       val (mu, inv) = Stats.mahalanobisModel(e, "vec_id", "embedding",

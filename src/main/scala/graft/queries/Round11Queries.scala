@@ -17,17 +17,7 @@ import graft.ext.{Analytics, AsofJoin, GlobalOrder, Graph, IvfIndex, Stats, Text
   * integer aggregates, or one fixed IEEE formula mirrored verbatim in
   * the oracle).
   */
-object Round11Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
-
-  /** DuckDB twin of [[graft.functions.Portable.wsTokens]]. */
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
-
-  /** DuckDB twin of [[graft.ext.Stats.cents]]. */
-  private def centsSql(e: String, scale: Int = 100): String =
-    s"CAST(floor($e * $scale + 0.5) AS BIGINT)"
+object Round11Queries extends QuerySet {
 
   /** q183 BFS depth budget. */
   private val BfsMaxDepth = 3
@@ -118,11 +108,6 @@ object Round11Queries {
       }
       (labels, cents)
     })
-
-  private def eventsUs(s: SparkSession, dir: String): DataFrame =
-    Readers.eventsNanos(s, dir).select(
-      col("user_id"), expr("ts div 1000").as("tsu"),
-      col("event_id"), col("event_type"), col("value"))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -554,7 +539,7 @@ object Round11Queries {
     })
   )
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
 
     "q182_audience_overlap" ->
       """WITH m AS (SELECT DISTINCT event_type AS g, user_id AS e
@@ -918,7 +903,7 @@ object Round11Queries {
     * rendered as `'x'::DOUBLE` (string→double parses exactly; bare
     * decimal literals lose ulps through DECIMAL).
     */
-  val dynamicOracleSql: Map[String, (SparkSession, String) => String] = Map(
+  override val dynamicOracleSql: Map[String, (SparkSession, String) => String] = Map(
     "q194_label_confusion" -> ((s, dir) => {
       val (labels, cents) = labelCentroids(s, dir)
       val values = cents.zipWithIndex.map { case (c, i) =>

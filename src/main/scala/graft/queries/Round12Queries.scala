@@ -11,19 +11,7 @@ import graft.ext.{Graph, Profile, Stats, TimeSeries}
   * as a library operator (`ext`/`engine`) and gated here against a DuckDB
   * oracle on the driver's parquet tables.
   */
-object Round12Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
-
-  private def eventsUs(s: SparkSession, dir: String): DataFrame =
-    Readers.eventsNanos(s, dir).select(
-      col("user_id"), expr("ts div 1000").as("tsu"),
-      col("event_id"), col("event_type"), col("value"))
-
-  /** DuckDB twin of [[graft.ext.Stats.cents]]. */
-  private def centsSql(e: String, scale: Int = 100): String =
-    s"CAST(floor($e * $scale + 0.5) AS BIGINT)"
+object Round12Queries extends QuerySet {
 
   /** q202 hop budget (q183's depth). */
   private val SsspMaxIter = 3
@@ -858,7 +846,7 @@ object Round12Queries {
     * new-mean and shift arithmetic mirrors the Spark side's
     * fixed-order formula term by term.
     */
-  val dynamicOracleSql: Map[String, (SparkSession, String) => String] = Map(
+  override val dynamicOracleSql: Map[String, (SparkSession, String) => String] = Map(
     "q224_cohens_kappa" -> ((s, dir) => {
       val (labels, cents) = Round11Queries.labelCentroids(s, dir)
       val values = cents.zipWithIndex.map { case (c, i) =>
@@ -966,7 +954,7 @@ object Round12Queries {
           ORDER BY cell"""
     }))
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
 
     "q202_sssp" ->
       s"""WITH RECURSIVE b AS (SELECT DISTINCT o_custkey AS ck,

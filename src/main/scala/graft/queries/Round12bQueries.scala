@@ -13,19 +13,7 @@ import graft.ext.{Dedup, GlobalOrder, Similarity, Stats, TimeSeries}
   * distributed aggregates are int64-exact under any partitioning and
   * the few derived doubles are one fixed IEEE formula on both engines.
   */
-object Round12bQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
-
-  private def eventsUs(s: SparkSession, dir: String): DataFrame =
-    Readers.eventsNanos(s, dir).select(
-      col("user_id"), expr("ts div 1000").as("tsu"),
-      col("event_id"), col("event_type"), col("value"))
-
-  /** DuckDB twin of [[graft.ext.Stats.cents]]. */
-  private def centsSql(e: String, scale: Int = 100): String =
-    s"CAST(floor($e * $scale + 0.5) AS BIGINT)"
+object Round12bQueries extends QuerySet {
 
   /** q238 cohort modulus (the q223 user-sharding convention). */
   private val AucCohorts = 8L
@@ -867,7 +855,7 @@ object Round12bQueries {
   /** q245 systematic sampling stride. */
   private val SysK = 7L
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
 
     "q238_roc_auc" ->
       s"""WITH e AS (SELECT user_id % $AucCohorts AS cohort,

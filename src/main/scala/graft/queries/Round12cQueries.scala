@@ -14,16 +14,7 @@ import graft.ext.{Stats, Survival, TextAnalysis, TimeSeries}
   * (int64 aggregates under any partitioning; derived doubles are one
   * fixed IEEE formula on both engines).
   */
-object Round12cQueries {
-
-  private def eventsUs(s: SparkSession, dir: String): DataFrame =
-    Readers.eventsNanos(s, dir).select(
-      col("user_id"), expr("ts div 1000").as("tsu"),
-      col("event_id"), col("event_type"), col("value"))
-
-  /** DuckDB twin of [[graft.ext.Stats.cents]]. */
-  private def centsSql(e: String, scale: Int = 100): String =
-    s"CAST(floor($e * $scale + 0.5) AS BIGINT)"
+object Round12cQueries extends QuerySet {
 
   private val DayUs = 86400000000L
 
@@ -564,7 +555,7 @@ object Round12cQueries {
     })
   )
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
 
     "q272_survival_km" ->
       s"""WITH per AS (SELECT user_id,
@@ -1174,7 +1165,7 @@ object Round12cQueries {
   /** q282's oracle depends on the run-time-learned label centroids —
     * rendered per (session, sfDir) like q215/q224 (the q64 mechanism).
     */
-  val dynamicOracleSql: Map[String, (SparkSession, String) => String] =
+  override val dynamicOracleSql: Map[String, (SparkSession, String) => String] =
     Map(
       "q290_pca_projection" -> ((s, dir) => {
         val (means, vec, eig) = Stats.pcaPowerModel(

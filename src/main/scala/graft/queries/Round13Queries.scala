@@ -12,15 +12,7 @@ import graft.ext.Dedup
   * [[graft.ext.Dedup.duplicatedSpans]] / [[graft.ext.Dedup.spanProvenance]];
   * adversarial shape: `substring_dedup_boilerplate` in ScaleBench.
   */
-object Round13Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
-
-  private def hash60Sql(e: String): String =
-    s"CAST('0x' || substr(md5($e), 1, 15) AS BIGINT)"
+object Round13Queries extends QuerySet {
 
   /** Window length (tokens) for the exact-substring queries. Lee et al.
     * use 50 BPE tokens on web corpora; the synthetic documents run
@@ -72,7 +64,7 @@ object Round13Queries {
         .orderBy("doc_id")),
   )
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
 
     "q295_substring_dedup" ->
       s"""WITH w AS (SELECT doc_id, $tokSql AS w FROM documents),

@@ -14,15 +14,7 @@ import graft.functions.Portable.wsTokens
   * window-free, all integer-exact up to one final IEEE division, all
   * DuckDB-gated.
   */
-object Round13bQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
-
-  private def hash60Sql(e: String): String =
-    s"CAST('0x' || substr(md5($e), 1, 15) AS BIGINT)"
+object Round13bQueries extends QuerySet {
 
   private val SpanL = 8
   private val RrfK = 60
@@ -79,7 +71,7 @@ object Round13bQueries {
     }),
   )
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
 
     "q298_dup_flow" ->
       s"""WITH w AS (SELECT doc_id, $tokSql AS w FROM documents),

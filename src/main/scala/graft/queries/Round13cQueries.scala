@@ -12,15 +12,7 @@ import graft.functions.Portable.wsTokens
   * Heaps-law vocabulary growth census. Window-free, integer-exact,
   * DuckDB-gated.
   */
-object Round13cQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
-
-  private def hash60Sql(e: String): String =
-    s"CAST('0x' || substr(md5($e), 1, 15) AS BIGINT)"
+object Round13cQueries extends QuerySet {
 
   private val SpanL = 8
   private val RefLang = "en"
@@ -113,7 +105,7 @@ object Round13cQueries {
                          AS dup_ratio
                 FROM sz LEFT JOIN d USING (doc_id))"""
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
 
     "q303_quantile_normalize" ->
       s"""WITH cells AS (SELECT lang, n_chars AS v, CAST(count(*) AS BIGINT) AS c

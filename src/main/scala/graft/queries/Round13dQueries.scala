@@ -12,18 +12,7 @@ import graft.ext.{Stats, TextAnalysis}
   * keyword extraction on the bounded top-k aggregate. Window-free,
   * integer-exact at every shuffle, DuckDB-gated.
   */
-object Round13dQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
-
-  private def hash60Sql(e: String): String =
-    s"CAST('0x' || substr(md5($e), 1, 15) AS BIGINT)"
-
-  private def centsSql(e: String): String =
-    s"CAST(floor($e * 100 + 0.5) AS BIGINT)"
+object Round13dQueries extends QuerySet {
 
   private val Chi2Target = "src0"
   private val KeywordK = 10
@@ -71,7 +60,7 @@ object Round13dQueries {
         .orderBy("source", "rnk")),
   )
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
 
     "q306_langid_kappa" ->
       s"""WITH c AS (SELECT doc_id, lang, ${ExtensionQueries.langCols}

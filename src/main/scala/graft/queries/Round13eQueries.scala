@@ -15,12 +15,7 @@ import graft.functions.Portable.hash60
   * rendered into a dynamic oracle whose transition counts are
   * recomputed independently.
   */
-object Round13eQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
+object Round13eQueries extends QuerySet {
 
   private val CalBins = 10
   private val EnWords: Seq[String] =
@@ -97,7 +92,7 @@ object Round13eQueries {
        FROM events
        WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)"""
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
 
     "q311_event_trigrams" ->
       s"""WITH l AS ($trigramLags)
@@ -156,7 +151,7 @@ object Round13eQueries {
     * SQL; the rational-solve π constants (not expressible in SQL) are
     * learned at render time and emitted as literals.
     */
-  val dynamicOracleSql: Map[String, (SparkSession, String) => String] =
+  override val dynamicOracleSql: Map[String, (SparkSession, String) => String] =
     Map(
       "q312_markov_stationary" -> ((s, dir) => {
         val ev = codedEvents(s, dir)

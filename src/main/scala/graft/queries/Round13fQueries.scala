@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.Readers
 import graft.ext.{Dedup, Pq, Sampling}
 import graft.functions.Portable.hash60
 
@@ -25,12 +24,7 @@ import graft.functions.Portable.hash60
   * ([[Round14Queries]] + [[graft.ext.Pq.encodePacked]]), whose recall
   * is gated ≥ 0.7.
   */
-object Round13fQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
+object Round13fQueries extends QuerySet {
 
   private val Dim = 8
   private val M = 2
@@ -133,7 +127,7 @@ object Round13fQueries {
     }),
   )
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
 
     "q317_greedy_coverage" -> {
       val hashSql =
@@ -226,7 +220,7 @@ object Round13fQueries {
                   FROM a0 JOIN a1 USING (vec_id))"""
   }
 
-  val dynamicOracleSql: Map[String, (SparkSession, String) => String] =
+  override val dynamicOracleSql: Map[String, (SparkSession, String) => String] =
     Map(
       "q315_pq_error" -> ((s, dir) => {
         val model = pqModel(s, dir)

@@ -12,10 +12,7 @@ import graft.functions.Portable
   * regression sums are integer-exact; only the solved chain
   * probabilities render into a dynamic oracle.
   */
-object Round13gQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+object Round13gQueries extends QuerySet {
 
   /** hash60('purchase') as a compile-side constant — must equal the
     * engine expression conv(substr(md5(x),1,15),16,10).
@@ -75,7 +72,7 @@ object Round13gQueries {
     }),
   )
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
 
     "q321_ols2" ->
       s"""WITH x AS (SELECT l_returnflag AS g,
@@ -176,7 +173,7 @@ object Round13gQueries {
     * the out_n column — recomputed independently with SQL windows; the
     * rational-solve probabilities render as per-channel literals.
     */
-  val dynamicOracleSql: Map[String, (SparkSession, String) => String] =
+  override val dynamicOracleSql: Map[String, (SparkSession, String) => String] =
     Map(
       "q320_markov_attribution" -> ((s, dir) => {
         val ev = codedEvents(s, dir)

@@ -14,7 +14,7 @@ import graft.functions.Portable.hash60
   * margins and residual quantiles verify in SQL; only the MM-fixed-
   * point scores render into a dynamic oracle.
   */
-object Round13hQueries {
+object Round13hQueries extends QuerySet {
 
   private val DayUs = 86400000000L
   // events span 2024-01-01 (day 19723) .. 2024-01-30 (day 19752);
@@ -23,16 +23,15 @@ object Round13hQueries {
   private val TestLo = 19745L; private val TestHi = 19752L
   private val CovPct = 90
 
-  private def centsSql(e: String): String =
-    s"CAST(floor($e * 100 + 0.5) AS BIGINT)"
-
-  private def eventsUs(s: SparkSession, dir: String): DataFrame =
+  /** [[QuerySet.eventsUs]] without `event_id`, in this file's column
+    * order. */
+  private def eventValuesUs(s: SparkSession, dir: String): DataFrame =
     Readers.eventsNanos(s, dir)
       .select(col("user_id"), col("event_type"),
         expr("ts div 1000").as("tsu"), col("value"))
 
   private def dailyByType(s: SparkSession, dir: String): DataFrame =
-    eventsUs(s, dir)
+    eventValuesUs(s, dir)
       .groupBy(col("event_type"), expr(s"tsu div ${DayUs}L").as("day"))
       .agg(sum(Stats.cents(col("value"))).as("y"))
 
@@ -49,7 +48,7 @@ object Round13hQueries {
     // b when a's mean value exceeds b's (exact cross-multiplied
     // integer compare); the MM solve runs on the collected win matrix.
     "q324_bradley_terry" -> ((s, dir) => {
-      val ut = eventsUs(s, dir)
+      val ut = eventValuesUs(s, dir)
         .groupBy(col("user_id"), col("event_type"))
         .agg(sum(Stats.cents(col("value"))).as("s"),
           count(lit(1)).as("n"))
@@ -65,7 +64,7 @@ object Round13hQueries {
       val wb = pairs.filter(col("__d") < 0)
         .groupBy(col("cb").as("wa"), col("ca").as("la"))
         .agg(count(lit(1)).as("w"))
-      val dim = eventsUs(s, dir).select(hash60(col("event_type"))
+      val dim = eventValuesUs(s, dir).select(hash60(col("event_type"))
         .as("code"), col("event_type")).distinct()
       Analytics.bradleyTerry(wa.unionAll(wb), "wa", "la", "w")
         .join(broadcast(dim), "code")
@@ -80,7 +79,7 @@ object Round13hQueries {
                CAST(sum(${centsSql("value")}) AS BIGINT) AS y
         FROM events GROUP BY 1, 2"""
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
 
     "q323_conformal" ->
       s"""WITH daily AS ($dailySql),
@@ -114,7 +113,7 @@ object Round13hQueries {
     * SQL (exact cross-multiplied mean compare, ties excluded); the MM
     * strengths render as literals.
     */
-  val dynamicOracleSql: Map[String, (SparkSession, String) => String] =
+  override val dynamicOracleSql: Map[String, (SparkSession, String) => String] =
     Map(
       "q324_bradley_terry" -> ((s, dir) => {
         val scored = queries("q324_bradley_terry")(s, dir)

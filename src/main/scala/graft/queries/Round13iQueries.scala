@@ -11,10 +11,7 @@ import graft.ext.{Mixture, Similarity}
   * allocation (uniform-up-to-availability, the anti-skew counterpart
   * of proportional allocation).
   */
-object Round13iQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+object Round13iQueries extends QuerySet {
 
   private val KSeeds = 4
 
@@ -61,7 +58,7 @@ object Round13iQueries {
   private def microSql(e: String): String =
     s"CAST(floor(($e) * 1000000.0 + 0.5) AS BIGINT)"
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
 
     // The greedy selection is pure data: each stage recomputes the
     // min-distance-to-selected argmax (d DESC, vec_id ASC) in SQL.
@@ -152,7 +149,7 @@ object Round13iQueries {
     * leftover (a k-element driver computation) render as literals, and
     * the allocation is re-derived in SQL as least(n, level).
     */
-  val dynamicOracleSql: Map[String, (SparkSession, String) => String] =
+  override val dynamicOracleSql: Map[String, (SparkSession, String) => String] =
     Map(
       "q326_waterfill" -> ((s, dir) => {
         val one = queries("q326_waterfill")(s, dir)

@@ -11,12 +11,7 @@ import graft.functions.TopKFunctions
   * mining over the labeled embedding space (nearest DIFFERENT-label
   * neighbors — the contrastive-training pair generator).
   */
-object Round13jQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
+object Round13jQueries extends QuerySet {
 
   private val QualityCuts = Seq(0.5, 0.6, 0.7, 0.8, 0.9)
   private val HnQueries = 5
@@ -71,7 +66,7 @@ object Round13jQueries {
     }),
   )
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
 
     "q328_quality_yield" -> {
       val enIn = TextAnalysis.enStopwords.map(w => s"'$w'")

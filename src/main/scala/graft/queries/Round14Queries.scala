@@ -19,10 +19,7 @@ import graft.ext.Pq
   * drops below 0.7, so a regression in training, encoding, or the ADC
   * scan turns the round red instead of silently degrading quality.
   */
-object Round14Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+object Round14Queries extends QuerySet {
 
   /** Bounded documents-stream harness — [[StreamingQueries
     * .runEventsStream]]'s symlink-scratch-dir pattern over
@@ -416,10 +413,6 @@ object Round14Queries {
     */
   private[queries] val SpanL = 8
 
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
-  private def hash60Sql(e: String): String =
-    s"CAST('0x' || substr(md5($e), 1, 15) AS BIGINT)"
-
   /** Full-corpus substring-dedup recompute (q295's oracle verbatim,
     * with an optional final doc filter): the merged-shard queries must
     * reproduce it bit-for-bit — the oracle knows nothing of shards.
@@ -587,7 +580,7 @@ object Round14Queries {
         ORDER BY r.doc_id"""
   }
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
     "q333_gram_merge_spans" -> spanOracle(""),
     "q334_gram_merge_incr" -> spanOracle("WHERE sz.doc_id % 2 = 1"),
     "q335_pass_at_k" -> passAtKSql,
@@ -768,7 +761,7 @@ object Round14Queries {
                dist_micro
         FROM r WHERE rnk <= $k ORDER BY query_id, rnk"""
 
-  val dynamicOracleSql: Map[String, (SparkSession, String) => String] =
+  override val dynamicOracleSql: Map[String, (SparkSession, String) => String] =
     Map(
       "q330_pq_hi_recall" -> ((s, dir) => {
         val model = hiModel(s, dir)

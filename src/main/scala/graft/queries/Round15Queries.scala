@@ -9,7 +9,8 @@ import graft.ext.Pq
   * proof, and the model-compatibility guard — each as a gated query.
   *
   *  - q345/q346: a ≤ 32-byte/vector PQ config GATED at recall@20 ≥ 0.7.
-  *    The Pq15Sweep evidence (docs/PLANS.md round-15 table): at m=32 the
+  *    The round-15 sweep evidence (docs/PLANS.md, "At m=32, codebook
+  *    capacity beats the permutation (round 15)"): at m=32 the
   *    codebook-capacity axis beats the permutation axis — k=256 plain
   *    (exactly 32 bytes/vector) reads 0.90/0.85 at sf0.01 and 0.85/0.80
   *    at sf0.1 (mean/min), vs 0.76/0.65 for round-14's m=32/k=64+perm —
@@ -36,10 +37,7 @@ import graft.ext.Pq
   *    result-invisible when models match; the mismatch arm is pinned by
   *    Round15Suite).
   */
-object Round15Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+object Round15Queries extends QuerySet {
 
   /** ≤ 32-byte config: m=32 subspaces × 8-bit codes (k=256) over the
     * raw coordinate order — the sweep's capacity-beats-permutation
@@ -380,7 +378,6 @@ object Round15Queries {
     * (fertility with the learned vocabulary) build on.
     */
   private[queries] def bpeStagesSql(steps: Int): String = {
-    val tokSql = raw"string_split_regex(trim(text), '\s+')"
     // Every stage CTE is MATERIALIZED: DuckDB 1.0 inlines plain CTEs, so
     // w_i's three references to w_{i-1} (direct + the two argmax scalar
     // subqueries) would re-evaluate the whole chain 3^steps times —
@@ -428,7 +425,6 @@ object Round15Queries {
     * merges are re-learned by the same stage prelude, never echoed.
     */
   private def bpeFertilitySql(steps: Int): String = {
-    val tokSql = raw"string_split_regex(trim(text), '\s+')"
     s"""WITH ${bpeStagesSql(steps)},
         pieces AS (SELECT replace(trim(state, '|'), '|', '') AS w,
                           CAST(len(string_split(trim(state, '|'), '|'))
@@ -449,7 +445,7 @@ object Round15Queries {
         GROUP BY 1 ORDER BY 1"""
   }
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
     "q354_bpe_train" -> bpeOracleSql(BpeSteps),
     "q355_bpe_fertility" -> bpeFertilitySql(BpeSteps),
 
@@ -457,9 +453,6 @@ object Round15Queries {
     // census is the batch recompute with doubled counts
     "q349_stream_gram_restart" -> {
       val spanL = Round14Queries.SpanL
-      val tokSql = raw"string_split_regex(trim(text), '\s+')"
-      def hash60Sql(e: String): String =
-        s"CAST('0x' || substr(md5($e), 1, 15) AS BIGINT)"
       s"""WITH w AS (SELECT doc_id, $tokSql AS w FROM documents),
           p AS (SELECT doc_id,
                        ${hash60Sql(s"array_to_string(w[i:i+${spanL - 1}], ' ')")} AS g
@@ -474,7 +467,7 @@ object Round15Queries {
           FROM g GROUP BY 1 ORDER BY cnt"""
     })
 
-  val dynamicOracleSql: Map[String, (SparkSession, String) => String] =
+  override val dynamicOracleSql: Map[String, (SparkSession, String) => String] =
     Map(
       "q345_pq32_adc" -> ((s, dir) =>
         Round14Queries.adcTopkSql(pq32Model(s, dir), Round14Queries.AdcK)),
@@ -513,7 +506,6 @@ object Round15Queries {
       // lexical CTEs are q140's weighting verbatim; the ADC half rides
       // the packed prelude; fusion is pure integer arithmetic
       "q351_hybrid_rrf" -> ((s, dir) => {
-        val tokSql = raw"string_split_regex(trim(text), '\s+')"
         s"""WITH ${Round14Queries.packedSql(Round14Queries.hiModel(s, dir))},
             annR AS (SELECT query_id, vec_id AS id, rnk FROM (
                        SELECT query_id, vec_id,

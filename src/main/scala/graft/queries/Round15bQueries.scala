@@ -25,10 +25,7 @@ import graft.ext.KMeans
   *  - q369/q370: hash-derived ±1 random projection with the JL
   *    estimator's quality measured exactly.
   */
-object Round15bQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+object Round15bQueries extends QuerySet {
 
   private val K = 4
   private val Iters = 3
@@ -492,7 +489,7 @@ object Round15bQueries {
           CAST(SUM(m[sm.d]*sm.s) AS BIGINT) AS z
           FROM m CROSS JOIN sm GROUP BY vec_id, sm.j)"""
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
 
     "q358_winnow_census" ->
       s"""WITH ${winnowStagesSql(WinN, WinW)}

@@ -17,14 +17,7 @@ import graft.ext.{Dedup, LangModel, Mixture}
   * [[graft.ext.Mixture.temperatureAllocation]] / [[graft.ext.Mixture.isqrt]],
   * [[graft.ext.LangModel.knDocScoreBits]].
   */
-object Round16Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
-  private def hash60Sql(e: String): String =
-    s"CAST('0x' || substr(md5($e), 1, 15) AS BIGINT)"
+object Round16Queries extends QuerySet {
 
   /** Window length for the span rewrite — q295's SpanL (8 whitespace
     * tokens: long enough that chance collisions are nil at every SF,
@@ -90,7 +83,7 @@ object Round16Queries {
         .orderBy("doc_id")),
   )
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
 
     "q372_remove_dup_spans" ->
       s"""WITH w AS MATERIALIZED (SELECT doc_id, $tokSql AS w

@@ -9,12 +9,7 @@ import org.apache.spark.sql.functions._
   * q376 emits the tokenized result). Library operator:
   * [[graft.ext.TextAnalysis.bpeEncode]].
   */
-object Round17Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
+object Round17Queries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -132,7 +127,7 @@ object Round17Queries {
                END AS n_chunks
         FROM c ORDER BY doc_id"""
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
     "q376_bpe_encode" -> bpeEncodeSql(Round15Queries.BpeSteps),
     "q377_bpe_pack" -> bpePackSql(Round15Queries.BpeSteps, PackTokens))
 }

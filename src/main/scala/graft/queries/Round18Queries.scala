@@ -19,12 +19,7 @@ import org.apache.spark.sql.functions._
   * batch hazard, rank tie-break, or merge pass on either engine
   * hash-fails.
   */
-object Round18Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
+object Round18Queries extends QuerySet {
 
   /** Contract constants: 12 stages x up to 32 merges over the top-512
     * candidate pairs per census — >= 256 learned merges at every SF
@@ -287,7 +282,7 @@ object Round18Queries {
                END AS n_chunks
         FROM c ORDER BY item_id, kind"""
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
     "q378_bpe_train_batched" ->
       cbpeTrainSql(CbpeStages, CbpeBatch, CbpeCands),
     "q379_bpe_corpus_encode" ->

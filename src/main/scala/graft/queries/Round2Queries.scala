@@ -12,10 +12,7 @@ import graft.streaming.EventStream
   * batch sessionization oracle, CUBE, correlated EXISTS, lateral token
   * positions, and a polynomial rolling-hash fingerprint.
   */
-object Round2Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
+object Round2Queries extends QuerySet {
 
   private def events(s: SparkSession, dir: String): DataFrame =
     Readers.eventsNanos(s, dir)
@@ -305,14 +302,13 @@ object Round2Queries {
   /** Oracles that depend on run-time-learned parameters: generated per
     * (session, sfDir) at Verify dump time.
     */
-  val dynamicOracleSql: Map[String, (SparkSession, String) => String] = Map(
+  override val dynamicOracleSql: Map[String, (SparkSession, String) => String] = Map(
     "q64_ann_ivf" -> ((s, dir) => ivfOracle(ivfCentroids(s, dir), k = 5, nProbe = 4)))
 
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
   private def hash30Sql(e: String): String =
     s"(CAST(('0x' || substr(md5($e), 1, 15)) AS BIGINT) & ${Portable.Hash30Mask})"
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
     "q54_asof_join" ->
       """WITH p AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us
                     FROM events WHERE event_type = 'purchase'),

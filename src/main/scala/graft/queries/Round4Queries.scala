@@ -10,10 +10,7 @@ import graft.engine.Readers
   * embed/resize/frame-sample paths (stub-codec outputs are md5-derived,
   * hence SQL-expressible value checks, like q67's decode).
   */
-object Round4Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
+object Round4Queries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -190,7 +187,7 @@ object Round4Queries {
   /** Oracles that depend on run-time-learned parameters (q72 shares q64's
     * trained-centroid oracle generator).
     */
-  val dynamicOracleSql: Map[String, (SparkSession, String) => String] = Map(
+  override val dynamicOracleSql: Map[String, (SparkSession, String) => String] = Map(
     "q72_ann_ivf_matrix" -> ((s, dir) =>
       Round2Queries.ivfOracle(Round2Queries.ivfCentroids(s, dir),
         k = 5, nProbe = 4)))
@@ -199,7 +196,7 @@ object Round4Queries {
     s"round((CAST(('0x' || substr(md5(text), ${2 * i + 1}, 2)) AS INTEGER)" +
       " - 127.5) / 127.5, 4)"
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
     "q69_sketch_bounds" ->
       """SELECT o_orderstatus, count(DISTINCT o_custkey) AS exact_distinct,
                 CAST(1 AS BIGINT) AS distinct_ok, CAST(1 AS BIGINT) AS p50_ok

@@ -12,10 +12,7 @@ import graft.functions.Portable
   * scoring, quality-weighted sampling, and the JSONL + JSON-column source
   * paths. Every entry is hash-checked against a DuckDB oracle.
   */
-object Round5Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
+object Round5Queries extends QuerySet {
 
   /** Chunk size for q78 — small enough that sf0.01 docs span chunk
     * boundaries both ways (many docs per chunk AND docs crossing chunks).
@@ -252,9 +249,7 @@ object Round5Queries {
     })
   )
 
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
-
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
 
     "q78_seq_packing" ->
       s"""WITH d AS (SELECT doc_id,

@@ -15,10 +15,7 @@ import graft.functions.Portable
   * hash-checked against a DuckDB oracle; q99's oracle is generated from
   * the run's trained centroids (the q64 pattern).
   */
-object Round6Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
+object Round6Queries extends QuerySet {
 
   /** q93 params: prefix-4 blocking keeps candidate pairs ~1k at sf0.01
     * (vs 125k all-pairs); distance over the first 60 chars at maxDist 35
@@ -214,17 +211,10 @@ object Round6Queries {
     Seq("l_orderkey", "l_partkey", "l_quantity", "l_returnflag",
       "l_linestatus")
 
-  // Engine-portable integer cents: floor(x*100 + 0.5) — see Stats.cents.
-  private def centsSql(e: String): String =
-    s"CAST(floor($e * 100 + 0.5) AS BIGINT)"
-
-  // DuckDB twin of Portable.wsTokens (same regex as the other rounds).
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
-
   private def deleteRecursively(p: java.nio.file.Path): Unit =
     graft.engine.Pipeline.deleteRecursively(p)
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
 
     "q93_edit_distance" ->
       s"""WITH d AS (SELECT doc_id, lang, substr(text, 1, $EditPrefix) AS blk,
@@ -452,7 +442,7 @@ object Round6Queries {
         ORDER BY a.vec_id"""
   }
 
-  val dynamicOracleSql: Map[String, (SparkSession, String) => String] = Map(
+  override val dynamicOracleSql: Map[String, (SparkSession, String) => String] = Map(
     "q99_semdedup" -> ((s, dir) =>
       semOracle(Round2Queries.ivfCentroids(s, dir), SemThreshold)))
 }

@@ -13,10 +13,7 @@ import graft.ext.{Sampling, Stats, TextAnalysis}
   * (·, /, integer-grid percentile midpoints), never libm calls, so they
   * are bit-identical across engines.
   */
-object Round6bQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
+object Round6bQueries extends QuerySet {
 
   /** q110: a bigram must occur this often to be a collocation candidate. */
   private val PmiMinCount = 20L
@@ -112,17 +109,10 @@ object Round6bQueries {
     })
   )
 
-  // DuckDB twins of Portable.wsTokens / Stats.cents / Portable.hash60
-  // (same fragments as the other rounds).
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
-  private def centsSql(e: String): String =
-    s"CAST(floor($e * 100 + 0.5) AS BIGINT)"
-  private def hash60Sql(e: String): String =
-    s"CAST('0x' || substr(md5($e), 1, 15) AS BIGINT)"
   private val enIn = TextAnalysis.enStopwords
     .map(w => s"'$w'").mkString("(", ", ", ")")
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
 
     "q108_scd2_history" ->
       """WITH c AS (SELECT user_id, epoch_us(ts) AS ver_us, event_type,

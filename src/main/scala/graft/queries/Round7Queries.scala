@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.{Readers, Warehouse}
+import graft.engine.Warehouse
 import graft.ext.{Dedup, Drift, GlobalOrder, Graph, Stats}
 import graft.queries.ExtensionQueries.shingleCte
 import graft.streaming.EventStream
@@ -15,10 +15,7 @@ import graft.streaming.EventStream
   * hash-compared, sketch outputs asserted within documented bounds via
   * TRUE flags, the q69/q107 pattern).
   */
-object Round7Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
+object Round7Queries extends QuerySet {
 
   /** q115 params: prefix-1 blocking makes blocks big enough that at
     * sf0.01 exactly one (lang, prefix) block exceeds the cap (38 docs vs
@@ -319,14 +316,7 @@ object Round7Queries {
     })
   )
 
-  // Engine-portable integer cents: floor(x*100 + 0.5) — see Stats.cents.
-  private def centsSql(e: String): String =
-    s"CAST(floor($e * 100 + 0.5) AS BIGINT)"
-
-  // DuckDB twin of Portable.wsTokens (same regex as the other rounds).
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
-
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
 
     "q115_edit_distance_capped" ->
       s"""WITH d0 AS (SELECT doc_id, lang, substr(text, 1, $CapPrefix) AS blk,
@@ -562,7 +552,7 @@ object Round7Queries {
         WHERE r.rnk = 1 ORDER BY cell"""
   }
 
-  val dynamicOracleSql: Map[String, (SparkSession, String) => String] = Map(
+  override val dynamicOracleSql: Map[String, (SparkSession, String) => String] = Map(
     "q129_cell_representatives" -> ((s, dir) =>
       cellRepOracle(Round2Queries.ivfCentroids(s, dir))))
 }

@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.Readers
 import graft.ext.{Dedup, Graph, Stats, TextAnalysis, TimeSeries}
 
 /** Round-8 batch: retrieval scoring, exact-arithmetic text statistics,
@@ -12,10 +11,7 @@ import graft.ext.{Dedup, Graph, Stats, TextAnalysis, TimeSeries}
   * functions (log) are deliberately absent because they are not
   * bit-reproducible across engines.
   */
-object Round8Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
+object Round8Queries extends QuerySet {
 
   /** q130 query terms: mid-frequency corpus vocabulary, so tf/df vary
     * across documents and all BM25 factors are exercised.
@@ -326,13 +322,7 @@ object Round8Queries {
     })
   )
 
-  // DuckDB twin of Portable.wsTokens (same regex as the other rounds).
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
-
-  private def centsSql(e: String): String =
-    s"CAST(floor($e * 100 + 0.5) AS BIGINT)"
-
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
 
     "q130_bm25" -> {
       val terms = Bm25Terms.map(q => s"'$q'").mkString(", ")

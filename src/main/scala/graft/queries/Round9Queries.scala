@@ -9,10 +9,7 @@ import graft.ext.{Dedup, DedupGroups, GlobalOrder, Graph, RangeJoin, Sampling, S
   * operators. Floats in compared columns follow the q110 discipline
   * (exact integer aggregates only).
   */
-object Round9Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
+object Round9Queries extends QuerySet {
 
   /** events with the nanosecond timestamp read as long and converted
     * (the q38 recipe — Spark cannot scan TIMESTAMP(NANOS) directly).
@@ -20,9 +17,6 @@ object Round9Queries {
   private def events(s: SparkSession, dir: String): DataFrame =
     Readers.eventsNanos(s, dir)
       .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-
-  /** DuckDB twin of [[graft.functions.Portable.wsTokens]]. */
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
 
   /** q147 session gap (30 min in epoch micros — q38's constant). */
   private val SessionGapUs = 30L * 60 * 1000000
@@ -370,7 +364,7 @@ object Round9Queries {
     })
   )
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
 
     "q147_sessionize_scalable" ->
       s"""WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS tsu,

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funspec.AnyFunSpec
+import graft.engine.GraftSession
 
 /** Shared local SparkSession for all specs (one JVM, forked by sbt). */
 trait SparkSpec extends AnyFunSpec {
@@ -10,10 +11,6 @@ trait SparkSpec extends AnyFunSpec {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val session: SparkSession =
+    GraftSession.local("graft-test", cpus = 4).getOrCreate()
 }

@@ -229,6 +229,52 @@ class ServiceSuite extends SparkSpec {
     } finally http.stop()
   }
 
+  private def withServer(f: Int => Unit): Unit = {
+    val http = new GraftHttpServer(svc)
+    val port = http.start()
+    try f(port) finally http.stop()
+  }
+
+  /** PUT raw `body` bytes as tenant LA; returns the response code. */
+  private def putStatus(port: Int, filename: String, password: String,
+                        body: Array[Byte]): Int = {
+    val c = new java.net.URI(s"http://127.0.0.1:$port/files/$filename")
+      .toURL.openConnection().asInstanceOf[java.net.HttpURLConnection]
+    c.setRequestMethod("PUT")
+    c.setRequestProperty("X-Graft-Client", "LA")
+    c.setRequestProperty("X-Graft-Password", password)
+    c.setDoOutput(true)
+    val out = c.getOutputStream
+    try out.write(body) finally out.close()
+    c.getResponseCode
+  }
+
+  it("stop() shuts the HTTP request pool down") {
+    val http = new GraftHttpServer(svc)
+    http.start()
+    http.stop()
+    assert(http.pool.isTerminated)
+  }
+
+  it("refuses an unauthenticated PUT before reading its body") {
+    // one frame header announcing a 1 GiB frame, and no frame after it
+    val body = java.nio.ByteBuffer.allocate(4).putInt(1 << 30).array()
+    withServer { port =>
+      assert(putStatus(port, "corporate_big.csv", "wrong", body) == 401)
+    }
+  }
+
+  it("answers 413 once the framed PUT body passes the size limit") {
+    // a 4-byte frame, then a header that takes the total one byte past
+    // the limit: refused before that frame is allocated
+    val body = java.nio.ByteBuffer.allocate(12)
+      .putInt(4).putInt(0)
+      .putInt((GraftHttpServer.MaxBodyBytes - 3).toInt).array()
+    withServer { port =>
+      assert(putStatus(port, "corporate_big.csv", "p1", body) == 413)
+    }
+  }
+
   it("refuses cross-tenant access") {
     assertThrows[IllegalArgumentException](
       svc.budgetReport("LA", "wrong", "corporate_a.csv"))
